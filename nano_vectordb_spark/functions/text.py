@@ -275,14 +275,13 @@ def _profile_arrow(texts):
         def row_sums(mask):
             # per-row sums of a per-byte 0/1 mask WITHOUT a global
             # cumsum (np.cumsum over bool/int8 measured pathologically
-            # slow — ~100 ns/elem); np.add.reduceat is ~50x faster,
-            # with explicit fix-ups for its empty-segment semantics
-            # (an empty segment yields vals[idx] instead of 0)
-            vals = mask.astype(np.int32)
-            if len(vals) == 0:
-                return np.zeros(n, dtype=np.int64)
-            idx = np.minimum(o[:-1], len(vals) - 1)
-            res = np.add.reduceat(vals, idx).astype(np.int64)
+            # slow — ~100 ns/elem); np.add.reduceat is ~50x faster.
+            # The sentinel 0 makes every row start a valid index
+            # (trailing empty rows start at len(mask)) without moving
+            # any segment end; empty segments yield vals[idx] instead
+            # of 0 and are zeroed explicitly.
+            vals = np.append(mask.astype(np.int32), 0)
+            res = np.add.reduceat(vals, o[:-1]).astype(np.int64)
             res[~nonempty] = 0
             return res
 

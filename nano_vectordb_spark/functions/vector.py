@@ -12,9 +12,10 @@ Design notes (100 TB mindset):
     same evaluation order DuckDB's list_dot_product uses — results are
     bit-identical to the oracle (verified in tests), mirroring the
     reference's double-accumulator scalar path (src/simd_dot.cpp:18-25).
-  * For the throughput-critical batched multi-query scan the matching
-    NumPy/Arrow path lives in operators/topk.py (two-phase top-k); these
-    expressions are the semantic definition both must agree with.
+  * ``dot_np`` / ``l2sq_np`` / ``cosine_np`` replay the same folds in
+    NumPy, bit-for-bit: the two-phase top-k kernel (operators/topk.py)
+    and driver-side IVF probing (operators/ivf.py) score with them, so
+    their outputs equal the expressions' without a rescoring join.
 """
 
 from __future__ import annotations
@@ -105,3 +106,37 @@ def has_nan_expr(a: ColumnOrName) -> Column:
     return F.exists(
         as_double_array(a), lambda x: x.isNaN() | (F.abs(x) == F.lit(float("inf")))
     )
+
+
+def _fold_np(a, b, term):
+    """Left-to-right float64 fold of ``term(a_d, b_d)`` over the last
+    axis, starting from 0.0: the rounding sequence of the expressions'
+    ``aggregate(zip_with(...), 0.0, s + x)``. Leading axes broadcast,
+    so (P, D) x (P, D) scores P row-aligned pairs and (N, 1, D) x
+    (1, Q, D) scores all N x Q pairs with only an (N, Q) accumulator."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for d in range(a.shape[-1]):
+        acc += term(a[..., d], b[..., d])
+    return acc
+
+
+def dot_np(a, b):
+    """NumPy twin of dot_expr, bit-identical."""
+    return _fold_np(a, b, lambda x, y: x * y)
+
+
+def l2sq_np(a, b):
+    """NumPy twin of l2sq_expr, bit-identical."""
+    return _fold_np(a, b, lambda x, y: (x - y) * (x - y))
+
+
+def cosine_np(a, b):
+    """NumPy twin of cosine_expr, bit-identical (IEEE sqrt, * and / are
+    correctly rounded in both engines)."""
+    import numpy as np
+
+    return dot_np(a, b) / (np.sqrt(dot_np(a, a)) * np.sqrt(dot_np(b, b)))

@@ -13,11 +13,15 @@ Spark-first design (SURVEY.md §4): the index IS the physical layout.
     persisting with
     partitionBy("cluster_id") turns nprobe probing into partition
     pruning, the reference's one semantic optimization (SURVEY §4).
+  * write: rows are rebalanced by cluster_id before the partitioned
+    write, so each inverted list is one file (AQE splits only oversized
+    lists).
   * search: stage 1 scores Q queries against the nlist centroids (both
-    tiny — broadcast) and keeps the top-nprobe clusters per query;
-    stage 2 scans ONLY those clusters (an IN filter on the partition
+    tiny — driver-side) and keeps the top-nprobe clusters per query;
+    stage 2 scans ONLY those clusters once (an IN filter on the partition
     column — at cluster scale Spark reads nprobe/nlist of the data) and
-    ranks top-k per query.
+    ranks top-k per query with the certified fold kernel shared with the
+    flat two-phase scan (operators/topk.certified_topk).
 
 At 100 TB with nlist=4096 and nprobe=64, stage 2 touches ~1.6% of the
 base bytes — the same data-skip ratio FAISS gets from inverted lists.
@@ -30,7 +34,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nano_vectordb_spark.operators.topk import rank_topk, score_expr
+from nano_vectordb_spark.operators.topk import (
+    collect_queries,
+    rank_topk,
+    score_expr,
+    two_phase_topk,
+)
 
 
 @dataclass
@@ -52,11 +61,11 @@ def centroids_matrix(index: IvfIndex):
     """Centroids as a (nlist, D) float64 NumPy matrix, cached on the
     index. In-process builds already have it (the Lloyd fit runs driver
     side); a persisted/reloaded index pays one tiny collect (nlist
-    rows), once."""
+    rows, one job: sorted driver-side, not by a range shuffle), once."""
     import numpy as np
 
     if index.centroids_np is None:
-        rows = index.centroids.orderBy("cluster_id").collect()
+        rows = sorted(index.centroids.collect(), key=lambda r: r.cluster_id)
         index.centroids_np = np.asarray(
             [r.centroid for r in rows], dtype=np.float64
         )
@@ -281,10 +290,15 @@ def ivf_list_radii(index: IvfIndex, vec_col: str = "embedding"):
 
 def ivf_write(index: IvfIndex, path: str) -> None:
     """Persist the index as its physical layout: base partitioned by
-    cluster_id (so probing prunes partitions) + a centroids table."""
-    index.assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(
-        f"{path}/base"
-    )
+    cluster_id (so probing prunes partitions) + a centroids table.
+
+    The rebalance hint shuffles rows by cluster_id before the
+    partitioned write, so each list directory gets one file rather than
+    one per input partition, and AQE splits only oversized lists. Scan
+    splits then follow list sizes, not the input's partitioning."""
+    index.assigned.hint("rebalance", "cluster_id").write.mode(
+        "overwrite"
+    ).partitionBy("cluster_id").parquet(f"{path}/base")
     index.centroids.write.mode("overwrite").parquet(f"{path}/centroids")
 
 
@@ -301,13 +315,9 @@ def centroid_d2_np(cent, qmat):
     sequential fold bit-exactly: per-dim (a-b)*(a-b) terms accumulated
     left-to-right in float64 — the shared arithmetic under
     probe_ids_np and the adaptive re-probe's bound."""
-    import numpy as np
+    from nano_vectordb_spark.functions.vector import l2sq_np
 
-    acc = np.zeros((cent.shape[0], qmat.shape[0]))
-    for d in range(cent.shape[1]):
-        diff = cent[:, d][:, None] - qmat[:, d][None, :]
-        acc += diff * diff
-    return acc
+    return l2sq_np(cent[:, None, :], qmat[None, :, :])
 
 
 def probe_ids_np(cent, qmat, nprobe):
@@ -372,13 +382,15 @@ def ivf_search(
 
     ``strategy="two_phase"`` (default) is the scale/speed path, the IVF
     analog of the flat two-phase scan (operators/topk.py O10-O12): the
-    probed clusters are scanned once, each Arrow batch is scored with
-    one NumPy matmul restricted to the queries actually probing that
-    batch's clusters (on the persisted layout a batch is one cluster,
-    so compute is exactly the probing pairs), masked per (query,
-    cluster), partially top-k'd per batch, and merged; the final Q x k
-    candidates are exact-rescored with the sequential fold so the
-    output is bit-identical to the join definition."""
+    probed clusters are scanned once and fed to the shared certified_topk
+    kernel. Each Arrow batch (which may span several clusters) is scored
+    with one NumPy matmul restricted to the queries probing any of its
+    clusters, and masked per (query, cluster). Only rows within the
+    matmul's certified error bound of the batch's k-th best are
+    re-scored with the sequential fold, so partials carry fold-exact
+    scores, and one window merges them. The output equals the join
+    definition by construction, with one scan of the layout and no
+    rescoring join."""
     _require_single_assignment(index, "ivf_search")
     if strategy == "join":
         probes = probe_clusters(index, queries, nprobe, query_id_col, query_vec_col)
@@ -408,148 +420,25 @@ def _ivf_search_two_phase(
     index, queries, k, nprobe, metric, id_col, vec_col, query_id_col, query_vec_col
 ) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
-    from nano_vectordb_spark.operators.topk import (
-        MAX_BROADCAST_QUERIES,
-        _rank_window,
-        exact_rescore,
-    )
-
-    qrows = (
-        queries.select(query_id_col, query_vec_col)
-        .limit(MAX_BROADCAST_QUERIES + 1)
-        .collect()
-    )
-    if len(qrows) > MAX_BROADCAST_QUERIES:
-        raise ValueError(
-            f"two_phase broadcasts the query batch and supports at most "
-            f"{MAX_BROADCAST_QUERIES} queries (the reference's Q contract)."
-        )
-    spark = index.assigned.sparkSession
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, score double, rank int"
-        )
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)  # (Q, D)
-
+    qids, qmat = collect_queries(queries, query_id_col, query_vec_col)
     # Stage-1 probing runs driver-side in NumPy (queries AND centroids
     # are both already on the driver — the fit is driver-side), saving
-    # a Spark job per search. The arithmetic replays probe_clusters
-    # bit-exactly: per-dim (a-b)*(a-b) terms accumulated left-to-right
-    # in float64 (the l2sq_expr sequential fold), ranked by
-    # (score asc, cluster_id asc).
-    cent = centroids_matrix(index)  # (nlist, D)
-    nq = len(qids)
-    mask = np.zeros((index.nlist, nq), dtype=bool)
-    for j, probed in enumerate(probe_ids_np(cent, qmat, nprobe)):
-        mask[probed, j] = True
-    clusters = sorted(np.flatnonzero(mask.any(axis=1)).tolist())
-
-    largest = metric != "l2"
-    sc = spark.sparkContext
-    b_qids, b_qmat, b_mask = sc.broadcast(qids), sc.broadcast(qmat), sc.broadcast(mask)
-
-    def local_topk(batches):
-        qi, qm, mk = b_qids.value, b_qmat.value, b_mask.value
-        qnorm = np.linalg.norm(qm, axis=1) if metric == "cosine" else None
-        out_q: list[np.ndarray] = []
-        out_i: list[np.ndarray] = []
-        out_s: list[np.ndarray] = []
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cl = pdf["cluster_id"].to_numpy(dtype=np.int64)
-            # queries probing any cluster present in this batch (on the
-            # partitioned layout: exactly the batch's probing queries)
-            qsel = np.flatnonzero(mk[np.unique(cl)].any(axis=0))
-            if qsel.size == 0:
-                continue
-            vals = pdf["embedding"].to_numpy()
-            try:
-                bm = np.concatenate(vals).reshape(len(vals), -1).astype(np.float64)
-            except ValueError:
-                bm = np.array(list(vals), dtype=np.float64)
-            qm_s = qm[qsel]
-            if metric == "dot":
-                s = bm @ qm_s.T
-            elif metric == "cosine":
-                s = (bm @ qm_s.T) / (
-                    np.linalg.norm(bm, axis=1)[:, None] * qnorm[qsel][None, :]
-                )
-            else:
-                s = (
-                    (bm * bm).sum(axis=1)[:, None]
-                    - 2.0 * (bm @ qm_s.T)
-                    + (qm_s * qm_s).sum(axis=1)[None, :]
-                )
-            allowed = mk[cl][:, qsel]  # (n, Qs)
-            fill = -np.inf if largest else np.inf
-            s = np.where(allowed, s, fill)
-            bkey = -s if largest else s
-            n = s.shape[0]
-            if n > k:
-                part = np.argpartition(bkey, k - 1, axis=0)[:k]
-                sel_key = np.take_along_axis(bkey, part, axis=0)
-                boundary = sel_key.max(axis=0)
-                ties_all = (bkey == boundary[None, :]).sum(axis=0)
-                ties_sel = (sel_key == boundary[None, :]).sum(axis=0)
-                for j in np.flatnonzero(ties_all > ties_sel):
-                    part[:, j] = np.lexsort((ids, bkey[:, j]))[:k]
-                sel_ids = ids[part]  # (k, Qs)
-                sel_s = np.take_along_axis(s, part, axis=0)
-            else:
-                sel_ids = np.broadcast_to(ids[:, None], (n, qsel.size)).copy()
-                sel_s = s
-            keep = np.isfinite(sel_s)  # drop masked fill rows
-            kk = sel_s.shape[0]
-            qcol = np.broadcast_to(qi[qsel][None, :], (kk, qsel.size))
-            out_q.append(qcol[keep])
-            out_i.append(sel_ids[keep])
-            out_s.append(sel_s[keep])
-        if not out_q:
-            return
-        fq = np.concatenate(out_q)
-        fi = np.concatenate(out_i)
-        fs = np.concatenate(out_s)
-        # per-partition winner set: first k per query by (score, vec_id)
-        key = -fs if largest else fs
-        order = np.lexsort((fi, key, fq))
-        fq, fi, fs = fq[order], fi[order], fs[order]
-        grp_start = np.r_[0, np.flatnonzero(np.diff(fq)) + 1]
-        pos = np.arange(fq.size) - np.repeat(grp_start, np.diff(np.r_[grp_start, fq.size]))
-        keep = pos < k
-        yield pd.DataFrame(
-            {"query_id": fq[keep], "vec_id": fi[keep], "score": fs[keep]}
-        )
-
-    pruned = index.assigned.filter(F.col("cluster_id").isin(clusters))
-    partials = pruned.select(
+    # a Spark job per search; probe_ids_np replays probe_clusters
+    # bit-exactly.
+    mask = np.zeros((index.nlist, len(qids)), dtype=bool)
+    if len(qids):
+        for j, probed in enumerate(
+            probe_ids_np(centroids_matrix(index), qmat, nprobe)
+        ):
+            mask[probed, j] = True
+    clusters = np.flatnonzero(mask.any(axis=1)).tolist()
+    scan = index.assigned.filter(F.col("cluster_id").isin(clusters)).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("embedding"),
         F.col("cluster_id"),
-    ).mapInPandas(local_topk, "query_id long, vec_id long, score double")
-    cand = (
-        partials.withColumn("rank", F.row_number().over(_rank_window(metric)))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id")
     )
-    # Rescore against the SAME pruned scan used for the partial phase:
-    # every candidate was produced from a probed cluster, so joining the
-    # candidate set back to `pruned` is semantically identical to joining
-    # against the full base, but keeps the nprobe/nlist partition pruning
-    # (a full-base rescore would re-read 100% of base bytes and forfeit
-    # the scan-skip win at scale).
-    return exact_rescore(
-        pruned,
-        queries,
-        cand,
-        metric=metric,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-    )
+    return two_phase_topk(scan, qids, qmat, k, metric, probe_mask=mask)
 
 
 def ivf_compact(

@@ -28,49 +28,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nano_vectordb_spark.functions.vector import dot_np
+
 from .topk import topk_multi
 
 MMR_LAMBDA = 0.5  # exact dyadic by design — see module docstring
 MAX_HEAD_ROWS = 1_000_000  # driver-residency guard (Q x pool)
-
-
-def _seq_dot_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(n, m) dot products with per-dimension left-to-right
-    accumulation — the exact order of list_dot_product / the engine's
-    sequential double fold (same trick as ivf.probe_ids_np)."""
-    acc = np.zeros((a.shape[0], b.shape[0]))
-    for d in range(a.shape[1]):
-        acc += a[:, d][:, None] * b[:, d][None, :]
-    return acc
-
-
-def _normalize_rows(mat: np.ndarray) -> np.ndarray:
-    """x / sqrt(sum x^2) per row, the sum accumulated per-dimension
-    left-to-right (matches list_aggregate(..., 'sum') of x*x)."""
-    acc = np.zeros(mat.shape[0])
-    for d in range(mat.shape[1]):
-        acc += mat[:, d] * mat[:, d]
-    return mat / np.sqrt(acc)[:, None]
-
-
-def _exact_scores(mat: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
-    """Relevance of every head row to the query with the engine's exact
-    sequential-fold semantics (operators/topk.score_expr's definitions,
-    accumulated per-dimension left-to-right in doubles)."""
-    if metric == "dot":
-        return _seq_dot_matrix(mat, q[None, :])[:, 0]
-    if metric == "cosine":
-        dots = _seq_dot_matrix(mat, q[None, :])[:, 0]
-        bn = np.zeros(mat.shape[0])
-        qn = 0.0
-        for d in range(mat.shape[1]):
-            bn += mat[:, d] * mat[:, d]
-            qn += q[d] * q[d]
-        return dots / (np.sqrt(bn) * np.sqrt(qn))
-    # MMR trades relevance against similarity in the same space; a
-    # distance metric would need a sign convention the objective doesn't
-    # define — reject instead of silently maximizing distance.
-    raise ValueError(f"mmr_rerank supports dot/cosine relevance, got {metric!r}")
 
 
 def mmr_rerank(
@@ -87,15 +50,16 @@ def mmr_rerank(
 
     Returns (query_id, vec_id, score, mmr_rank): score is the original
     relevance score; mmr_rank the diversified selection order."""
+    # MMR trades relevance against similarity in the same space; a
+    # distance metric would need a sign convention the objective doesn't
+    # define — reject instead of silently maximizing distance.
+    if metric not in ("dot", "cosine"):
+        raise ValueError(f"mmr_rerank supports dot/cosine relevance, got {metric!r}")
     cand = topk_multi(base, queries, pool, metric=metric, strategy="two_phase")
     head = cand.join(
         base.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")),
         "vec_id",
     ).select("query_id", "vec_id", "score", "__v")
-    qvecs = {
-        int(r[0]): np.asarray(r[1], dtype=np.float64)
-        for r in queries.select("query_id", "embedding").collect()
-    }
     rows = head.limit(MAX_HEAD_ROWS + 1).collect()
     if len(rows) > MAX_HEAD_ROWS:
         raise ValueError(
@@ -111,15 +75,12 @@ def mmr_rerank(
         rs = by_q[qid]
         ids = np.asarray([r[1] for r in rs], dtype=np.int64)
         mat = np.asarray([r[3] for r in rs], dtype=np.float64)
-        # Recompute relevance with the exact sequential fold rather than
-        # trusting the two-phase partials: the BLAS matmul's reduction
-        # order (and so its last ulp) depends on partition/batch layout,
-        # which would make MMR's output partition-dependent and break
-        # the bit-exact oracle contract. The head is already
-        # driver-resident, so this costs one (pool x D) pass.
-        scores = _exact_scores(mat, qvecs[qid], metric)
-        en = _normalize_rows(mat)
-        sim = _seq_dot_matrix(en, en)
+        # two-phase scores are already sequential-fold exact, so they
+        # do not depend on partition/batch layout
+        scores = np.asarray([r[2] for r in rs], dtype=np.float64)
+        # per-element x / sqrt(sum x^2), the sum a sequential fold
+        en = mat / np.sqrt(dot_np(mat, mat))[:, None]
+        sim = dot_np(en[:, None, :], en[None, :, :])
         selected: list[int] = []
         remaining = np.ones(len(rs), dtype=bool)
         for step in range(min(k, len(rs))):

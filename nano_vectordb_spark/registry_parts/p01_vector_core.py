@@ -126,12 +126,11 @@ def topk_multi_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("topk_multi_twophase", oracle=_SQL_TOPK_MULTI)
 def topk_multi_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched multi-query exact top-k, partial/final strategy
-    (reference O10-O12 heap-merge pattern), rescored exactly so the
-    output is bit-identical to the declarative definition."""
+    (reference O10-O12 heap-merge pattern); its partials carry
+    sequential-fold scores, so the output is bit-identical to the
+    declarative definition."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = _queries_df(spark, sf_dir)
-    two = topk_ops.topk_multi(emb, q, K, strategy="two_phase")
-    return topk_ops.exact_rescore(emb, q, two)
+    return topk_ops.topk_multi(emb, _queries_df(spark, sf_dir), K, strategy="two_phase")
 
 
 @register(

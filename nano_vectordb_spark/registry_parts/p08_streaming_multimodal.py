@@ -147,12 +147,12 @@ def doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash embedding -> exact top-k of the first 5 chunks against the
     chunk corpus (each query's own chunk must rank first — asserted in
     tests/test_textops.py). Oracle replays the whole chunk->embed->rank
-    pipeline in SQL; scores are exact-rescored folds, so they
-    hash-match the sequential-fold definition.
+    pipeline in SQL; two-phase scores are sequential folds, so they
+    hash-match the definition.
 
     r13: the embedded chunk corpus is pinned with a lazy
-    localCheckpoint — it feeds THREE consumers (query prefix, the
-    two-phase scan, the exact rescore), so the chunk->hash-embed
+    localCheckpoint — it feeds two consumers (query prefix and the
+    two-phase scan), so the chunk->hash-embed
     pipeline otherwise executed per consumer; the built plan is
     memoized per (applicationId, sf_dir) because the two-phase build
     collects its query batch eagerly at construction."""
@@ -169,8 +169,7 @@ def doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(5)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
-    two = topk_ops.topk_multi(emb, queries, 5, strategy="two_phase")
-    _INDEX_CACHE[key] = topk_ops.exact_rescore(emb, queries, two)
+    _INDEX_CACHE[key] = topk_ops.topk_multi(emb, queries, 5, strategy="two_phase")
     return _INDEX_CACHE[key]
 
 

@@ -574,8 +574,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan stays join-of-two-topk at any corpus size.
 
     r13: the embedded corpus frame is pinned with a lazy
-    localCheckpoint (it feeds the two-phase base, the rescore base and
-    the query split — the hash-embed fold otherwise re-executed per
+    localCheckpoint (it feeds the two-phase base and the query split — the hash-embed fold otherwise re-executed per
     consumer) and the built plan is memoized per (applicationId,
     sf_dir) — the two-phase build collects its query batch eagerly."""
     key = ("hybrid_search_rrf", spark.sparkContext.applicationId, sf_dir)
@@ -603,8 +602,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     qemb = emb.filter(F.col("doc_id") < 0).select(
         (-F.col("doc_id") - 1).alias("query_id"), "embedding"
     )
-    sem = topk_ops.topk_multi(demb, qemb, _RRF_POOL, strategy="two_phase")
-    sem = topk_ops.exact_rescore(demb, qemb, sem).select(
+    sem = topk_ops.topk_multi(demb, qemb, _RRF_POOL, strategy="two_phase").select(
         "query_id", F.col("vec_id").alias("doc_id"), F.col("rank").alias("sem_rank")
     )
     fused = lex.join(sem, ["query_id", "doc_id"], "full_outer").select(

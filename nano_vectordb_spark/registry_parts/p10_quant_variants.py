@@ -1114,7 +1114,7 @@ def knn_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-propagation and kNN-graph ANN methods, and the per-row
     sibling of the radius search. Physical shape: the query side runs
     in blocks of at most the two-phase broadcast contract (Q <= 10k),
-    each block one two-phase scan + exact rescore — the block-matmul
+    each block one two-phase scan — the block-matmul
     economics an exact all-to-all kNN costs at any scale (every block
     rescans the base; the blocking only bounds driver/broadcast
     memory). Results union across blocks; self-pairs drop before
@@ -1138,8 +1138,9 @@ def knn_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("query_id"), "embedding"
         )
         # k+1 candidates so dropping the self-pair still leaves k
-        two = topk_ops.topk_multi(emb, q, _KNN_JOIN_K + 1, strategy="two_phase")
-        parts.append(topk_ops.exact_rescore(emb, q, two))
+        parts.append(
+            topk_ops.topk_multi(emb, q, _KNN_JOIN_K + 1, strategy="two_phase")
+        )
     res = parts[0]
     for p in parts[1:]:
         res = res.unionAll(p)

@@ -889,8 +889,7 @@ def rankers_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     qemb = emb.filter(F.col("doc_id") < 0).select(
         (-F.col("doc_id") - 1).alias("query_id"), "embedding"
     )
-    sem = topk_ops.topk_multi(demb, qemb, _RRF_POOL, strategy="two_phase")
-    sem = topk_ops.exact_rescore(demb, qemb, sem).select(
+    sem = topk_ops.topk_multi(demb, qemb, _RRF_POOL, strategy="two_phase").select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("vec_id").alias("doc_id"),
     )

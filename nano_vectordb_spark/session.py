@@ -2,14 +2,45 @@
 
 Local-mode settings mirror what we would set on a real cluster: AQE on
 (runtime re-plan, skew-join handling), shuffle partitions sized to the
-parallelism, Arrow enabled for the Pandas-UDF slow path.
+parallelism, Arrow enabled for the Pandas-UDF slow path. The package
+itself is shipped to the Python workers, so UDFs that reference its
+module-level functions run from any working directory.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def _ship_package(sc) -> None:
+    """``addPyFile`` a zip of this package, once per SparkContext.
+    cloudpickle pickles module-level functions by reference, so a
+    worker must import ``nano_vectordb_spark`` itself; without the zip
+    that works only when the worker's working directory (the driver's)
+    happens to contain the package."""
+    if getattr(sc, "_nvdb_package_shipped", False):
+        return
+    tmp = tempfile.mkdtemp(prefix="nvdb-pyfiles-")
+    atexit.register(shutil.rmtree, tmp, True)
+    path = os.path.join(tmp, "nano_vectordb_spark.zip")
+    root = os.path.dirname(_PACKAGE_DIR)
+    with zipfile.ZipFile(path, "w") as zf:
+        for d, subdirs, files in os.walk(_PACKAGE_DIR):
+            subdirs[:] = [s for s in subdirs if s != "__pycache__"]
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(d, f)
+                    zf.write(full, os.path.relpath(full, root))
+    sc.addPyFile(path)
+    sc._nvdb_package_shipped = True
 
 
 def get_spark(
@@ -69,4 +100,5 @@ def get_spark(
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark.sparkContext)
     return spark

@@ -65,6 +65,25 @@ def test_partition_layout_roundtrip(setup, tmp_path):
     assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
 
 
+def test_ivf_write_one_file_per_list(setup, tmp_path):
+    """ivf_write rebalances rows by cluster_id before the partitioned
+    write: each inverted list is one file, not one per input partition
+    (at test scale no list is large enough for AQE to split)."""
+    import dataclasses
+    import os
+
+    base, queries, index, gt = setup
+    path = str(tmp_path / "ivf_files")
+    # four input partitions, each holding rows of every list
+    spread = dataclasses.replace(index, assigned=index.assigned.repartition(4))
+    ivf_ops.ivf_write(spread, path)
+    lists = [d for d in os.listdir(f"{path}/base") if d.startswith("cluster_id=")]
+    assert len(lists) == NLIST
+    for d in lists:
+        files = [f for f in os.listdir(f"{path}/base/{d}") if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+
+
 def test_ivf_add_equals_bulk_assignment(setup):
     base, queries, index, gt = setup
     # split the base, rebuild on one part, add the other: because

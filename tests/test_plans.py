@@ -167,27 +167,43 @@ def test_events_partitioned_scan_prunes_partitions(spark):
 
 
 def test_ivf_rescore_reuses_pruned_scan(spark, base, queries, tmp_path):
-    """The exact-rescore pass must run against the SAME partition-pruned
-    scan as the partial phase — a full-base rescore would re-read 100%
-    of base bytes and forfeit the nprobe/nlist scan-skip at scale
-    (round-2 VERDICT 'What's wrong' #1)."""
+    """The two-phase IVF search reads its layout exactly once, through
+    the cluster_id partition filter: partials carry fold-exact scores,
+    so no rescoring pass re-reads the probed lists, and no base scan
+    reads the full layout (forfeiting the nprobe/nlist scan-skip)."""
     index = ivf_ops.ivf_build(base, nlist=8, seed=42)
     path = str(tmp_path / "ivf_rescore")
     ivf_ops.ivf_write(index, path)
     disk = ivf_ops.ivf_read(spark, path, nlist=8)
     df = ivf_ops.ivf_search(disk, queries, 10, nprobe=2)
     plan = physical_plan(df, "formatted")
-    pf_lines = [
-        ln for ln in plan.splitlines() if "PartitionFilters:" in ln
-    ]
-    base_pf = [ln for ln in pf_lines if "cluster_id" in ln]
-    # both base scans (partial top-k AND rescore) carry the cluster_id
-    # partition filter; no base scan reads the full layout
-    assert len(base_pf) >= 2, plan
-    assert all("cluster_id" in ln for ln in base_pf), plan
-    empty = [ln for ln in pf_lines if "PartitionFilters: []" in ln and "cluster_id" not in ln]
-    # only the (non-partitioned) centroids/queries scans may be unpruned
-    assert len(pf_lines) - len(base_pf) == len(empty), plan
+    # queries and centroids are collected driver-side, so every scan in
+    # the plan is a scan of the base layout
+    scans = re.findall(r"^\(\d+\) Scan parquet.*?(?=^\(\d+\) |\Z)", plan, re.S | re.M)
+    assert len(scans) == 1, plan
+    assert re.search(r"PartitionFilters: \[.*cluster_id", scans[0]), plan
+
+
+def test_ivf_search_job_count(spark, base, queries, tmp_path):
+    """On a persisted index, a two-phase IVF search plus its action
+    launches at most 4 jobs: the query collect, the (lazy, one-off)
+    centroid collect, and the scan and merge stages of the one pass."""
+    index = ivf_ops.ivf_build(base, nlist=8, seed=42)
+    path = str(tmp_path / "ivf_jobs")
+    ivf_ops.ivf_write(index, path)
+    disk = ivf_ops.ivf_read(spark, path, nlist=8)
+    queries.write.parquet(str(tmp_path / "queries"))
+    qdisk = spark.read.parquet(str(tmp_path / "queries"))
+    sc = spark.sparkContext
+    group = f"ivf-search-jobs-{id(disk)}"
+    sc.setJobGroup(group, "ivf_search job count")
+    try:
+        rows = ivf_ops.ivf_search(disk, qdisk, 10, nprobe=2).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 5 * 10
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 4, sorted(jobs)
 
 
 def test_binary_candidates_scan_only_signatures(spark, base, tmp_path):

@@ -11,6 +11,8 @@ mapping could in principle diverge.
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nano_vectordb_spark.functions import text as tx
@@ -108,3 +110,35 @@ def test_profile_udf_null_and_empty_text(spark):
     # empty text: n_chars 0 (ratio guard's zero branch)
     assert out[2]["n_chars"] == 0
     assert out[3]["n_chars"] == 1 and out[3]["n_punct"] == 0
+
+
+_PROFILE_TEXT = st.lists(
+    st.one_of(
+        st.sampled_from(sorted(tx._PROFILE_LOOKUP)),
+        st.text(alphabet="ab,.!'-é", max_size=5),
+    ),
+    max_size=5,
+).map(" ".join)
+
+
+@given(
+    texts=st.lists(st.one_of(st.none(), _PROFILE_TEXT), max_size=6),
+    filler=st.sampled_from(["", None, " "]),
+    start=st.integers(0, 2),
+)
+@settings(max_examples=200, deadline=None)
+def test_profile_arrow_empty_and_null_rows_any_position(texts, filler, start):
+    """The columnar profile equals the _profile_batch reference with an
+    empty, null or blank row at every batch position (first, middle,
+    last), on arrays with a nonzero slice offset too."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    for pos in range(len(texts) + 1):
+        batch = texts[:pos] + [filler] + texts[pos:]
+        arr = pa.array(["lead"] * start + batch, pa.string()).slice(start)
+        got = tx._profile_arrow(arr)
+        got = np.column_stack([got.field(c).to_numpy() for c in tx._PROFILE_COLS])
+        want = tx._profile_batch(pd.Series(batch, dtype=object))[tx._PROFILE_COLS]
+        assert got.tolist() == want.to_numpy().tolist(), (batch, pos)
